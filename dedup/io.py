@@ -35,16 +35,9 @@ from .fs import get_fs, read_json, write_json_atomic
 
 
 class Warehouse:
-    def __init__(
-        self, root: str, config_hash: str, run_id: str = "run0",
-        legacy_hashes: tuple[str, ...] = (),
-    ):
+    def __init__(self, root: str, config_hash: str, run_id: str = "run0"):
         self.root = root
         self.config_hash = config_hash
-        # accepted-but-not-written hashes (DedupConfig.legacy_config_hashes):
-        # manifests stamped by an older hash FORMULA for the same config
-        # values resume instead of silently rebuilding the warehouse
-        self.legacy_hashes = tuple(legacy_hashes)
         self.run_id = run_id
         self._fs = None
         self._obs_seq = 0
@@ -78,19 +71,6 @@ class Warehouse:
             return False
         got = m.get("config_hash")
         if got == self.config_hash:
-            return True
-        if got in self.legacy_hashes:
-            # same config VALUES, older hash formula: results are identical
-            # by construction, so resume (r03 advice — don't turn a formula
-            # migration into a silent 100 TB rebuild). New writes stamp the
-            # current hash, so this acceptance self-retires.
-            if stage not in self._warned_stale:
-                self._warned_stale.add(stage)
-                print(
-                    f"warehouse: stage {stage!r} accepted under legacy "
-                    f"config-hash {got} (current {self.config_hash})",
-                    file=sys.stderr,
-                )
             return True
         if stage not in self._warned_stale:
             # surface silent full recomputes (r03 advice): at 100 TB a hash
@@ -164,9 +144,9 @@ class Warehouse:
             # DAG instead of guessing dependents from commit order, which
             # the concurrent tail makes racy (an independent stage that
             # happened to commit later would be dropped and recomputed).
-            # None = caller didn't record deps (ad-hoc writers): the field
-            # stays absent and invalidation falls back to the time cut;
-            # [] = a root stage with genuinely no stage inputs.
+            # None = caller didn't record deps (ad-hoc writers that never
+            # invalidate): the field stays absent and invalidate_after
+            # refuses the warehouse; [] = a root stage with no stage inputs.
             **({"deps": sorted(deps)} if deps is not None else {}),
             **({"observed": observed} if observed else {}),
             **{k: (v() if callable(v) else v) for k, v in (extra or {}).items()},
@@ -203,8 +183,8 @@ class Warehouse:
         # the journal alone can miss a stage whose manifest committed but
         # whose lineage append never ran (crash between write_json_atomic
         # and _append_lineage): union in every _manifest_*.json actually on
-        # disk, otherwise invalidation (deps walk AND time cut both iterate
-        # this list) would silently keep such a stage marked complete over
+        # disk, otherwise invalidation (the deps walk iterates this list)
+        # would silently keep such a stage marked complete over
         # rebuilt inputs — stale reuse, the one failure resume must never
         # have
         for name in self.fs.list_files(self.root):
@@ -214,53 +194,37 @@ class Warehouse:
                     seen.append(s)
         return seen
 
-    def invalidate_after(self, stage: str, ordered_stages: list[str] | None = None) -> None:
-        """Drop manifests for `stage` and every stage that may depend on it
+    def invalidate_after(self, stage: str) -> None:
+        """Drop manifests for `stage` and every stage that depends on it
         (kill/resume tests, stage rebuilds).
 
-        With no explicit list, the cut walks the RECORDED dependency DAG
-        (each manifest's "deps" names its actual input stages): drop `stage`
-        plus its transitive dependents, and nothing else. Commit ORDER is not
-        a safe proxy in either direction — the concurrent tail makes the
-        order of independent stages racy (an independent stage that happened
-        to commit later would be dropped and recomputed: wasteful, and flaky
-        for resume tests), and journal first-seen order spans regroupings
-        (a band-group name first committed in a later run appears after its
-        own dependents). For pre-deps warehouses (any manifest missing the
-        field) the cut falls back to CURRENT manifest commit time: a stage
-        committed at time T consumed only inputs committed before T, so
-        dropping every stage with committed_at >= committed_at(stage) is a
-        conservative superset of its dependents (extra drops are safe
-        recomputes, never a stale reuse)."""
-        if ordered_stages is not None:
-            if stage in ordered_stages:
-                for s in ordered_stages[ordered_stages.index(stage):]:
-                    self.fs.delete(self._manifest_path(s))
-            return
-        target = self.manifest(stage)
-        if target is None:
-            return
-        mans = {}
+        The cut walks the RECORDED dependency DAG (each manifest's "deps"
+        names its actual input stages): drop `stage` plus its transitive
+        dependents, and nothing else. Commit ORDER is not a safe proxy in
+        either direction — the concurrent tail makes the order of
+        independent stages racy (an independent stage that happened to
+        commit later would be dropped and recomputed), and journal
+        first-seen order spans regroupings (a band-group name first
+        committed in a later run appears after its own dependents). A
+        manifest without "deps" (an ad-hoc writer) makes the DAG unknowable,
+        so the cut raises ValueError rather than guess."""
+        children: dict[str, set[str]] = {}
         for s in self.stage_order():
             m = self.manifest(s)
-            if m is not None:
-                mans[s] = m
-        if all("deps" in m for m in mans.values()):
-            children: dict[str, set[str]] = {}
-            for s, m in mans.items():
-                for d in m["deps"]:
-                    children.setdefault(d, set()).add(s)
-            drop, frontier = {stage}, [stage]
-            while frontier:
-                for c in children.get(frontier.pop(), ()):
-                    if c not in drop:
-                        drop.add(c)
-                        frontier.append(c)
-            for s in drop:
-                self.fs.delete(self._manifest_path(s))
-            return
-        cut = target["committed_at"]
-        for s in self.stage_order():
-            m = self.manifest(s)
-            if m is not None and m["committed_at"] >= cut:
-                self.fs.delete(self._manifest_path(s))
+            if m is None:
+                continue
+            if "deps" not in m:
+                raise ValueError(
+                    f"warehouse: stage {s!r} manifest records no deps, so the "
+                    f"dependents of {stage!r} cannot be determined"
+                )
+            for d in m["deps"]:
+                children.setdefault(d, set()).add(s)
+        drop, frontier = {stage}, [stage]
+        while frontier:
+            for c in children.get(frontier.pop(), ()):
+                if c not in drop:
+                    drop.add(c)
+                    frontier.append(c)
+        for s in drop:
+            self.fs.delete(self._manifest_path(s))

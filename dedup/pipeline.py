@@ -43,23 +43,6 @@ from .components import connected_components
 from .config import DedupConfig, DEFAULT
 from .io import Warehouse
 
-STAGES = [
-    "keys",
-    "reps",
-    "signatures",
-    "scored_minhash_b00_07",
-    "scored_minhash_b08_15",
-    "scored_minhash_b16_23",
-    "scored_minhash_b24_31",
-    "edges_minhash",
-    "edges_simhash",
-    "edges_substring",
-    "pairs",
-    "assignments",
-    "metrics",
-    "member_scores",
-]
-
 
 def exact_member_edges(
     keys: DataFrame,
@@ -265,10 +248,7 @@ class Pipeline:
         granularity where it matters."""
         self.cfg = cfg
         self.band_groups = band_groups
-        self.wh = Warehouse(
-            warehouse_root, cfg.config_hash(), run_id,
-            legacy_hashes=cfg.legacy_config_hashes(),
-        )
+        self.wh = Warehouse(warehouse_root, cfg.config_hash(), run_id)
 
     def _resolve_band_groups(self, n_sigs: int) -> int:
         if self.band_groups != "auto":
@@ -280,12 +260,9 @@ class Pipeline:
         return 4
 
     # -- stage runner with resume skip ------------------------------------
-    def _stage(self, spark: SparkSession, name: str, build, deps: tuple | None = None, **man_kw) -> DataFrame:
-        # deps default None, NOT (): a future stage whose author forgets to
-        # pass deps must degrade to the warehouse's conservative time-cut
-        # invalidation (None = unrecorded), never be recorded as a root
-        # ([]), which the DAG walk would leave marked complete over rebuilt
-        # inputs — stale reuse. Roots say deps=() explicitly.
+    def _stage(self, spark: SparkSession, name: str, build, deps, **man_kw) -> DataFrame:
+        # deps: the stage's input stage names, recorded in its manifest for
+        # Warehouse.invalidate_after's DAG walk; roots pass deps=()
         if self.wh.is_complete(name):
             return self.wh.read(spark, name)
         t0 = time.time()
@@ -293,7 +270,7 @@ class Pipeline:
         df, extra = out if isinstance(out, tuple) else (out, None)
         self.wh.write(
             df, name, wall_ms=int((time.time() - t0) * 1000), extra=extra,
-            deps=None if deps is None else list(deps), **man_kw,
+            deps=list(deps), **man_kw,
         )
         return self.wh.read(spark, name)
 

@@ -107,15 +107,9 @@ class StreamState:
                 "silently re-rooting every arrival. Start a fresh state "
                 "warehouse (rerun compaction to rebuild assignments)."
             )
-        # absent field = legacy manifest from before key_params existed:
-        # treated as compatible (a refusal would force a rebuild of state
-        # that IS key-compatible under the unchanged default cfg) and
-        # stamped by the next commit; only a RECORDED mismatch refuses.
-        if (
-            self.key_params is not None
-            and "key_params" in man
-            and man["key_params"] != self.key_params
-        ):
+        # an absent field refuses like a recorded mismatch: the state's key
+        # params are unknown, so its keys cannot be trusted to equi-join
+        if self.key_params is not None and man.get("key_params") != self.key_params:
             raise RuntimeError(
                 f"state at {self.root} was written with key params "
                 f"{man.get('key_params')!r}, this stream derives {self.key_params!r} "

@@ -65,7 +65,7 @@ def test_warehouse_on_hadoop_uri_commits_and_resumes(spark, synth_parquet, tmp_p
 
     ts = p.wh.manifest("signatures")["committed_at"]
     p2 = Pipeline(root, band_groups="auto")
-    p2.wh.invalidate_after("edges_simhash")  # order derived from lineage
+    p2.wh.invalidate_after("edges_simhash")  # walks the recorded deps
     assert not p2.wh.is_complete("assignments")
     assert p2.wh.is_complete("signatures")
     res2 = {r["image_id"]: r["cluster_id"] for r in p2.run(spark, images).collect()}
@@ -77,8 +77,8 @@ def test_warehouse_on_hadoop_uri_commits_and_resumes(spark, synth_parquet, tmp_p
 
 
 def test_stage_order_knows_auto_band_groups(spark, synth_parquet, tmp_path):
-    """invalidate_after with NO static stage list must see the auto-resolved
-    band-group stage names (r03 advice: STAGES hardcodes the 4-group names)."""
+    """invalidate_after must see the auto-resolved band-group stage names
+    (r03 advice: a static stage list hardcodes the 4-group names)."""
     from dedup.pipeline import Pipeline
 
     wh = str(tmp_path / "wh")
@@ -88,7 +88,7 @@ def test_stage_order_knows_auto_band_groups(spark, synth_parquet, tmp_path):
     order = p.wh.stage_order()
     assert "scored_minhash_b00_31" in order  # the auto-resolved single group
     assert order.index("signatures") < order.index("scored_minhash_b00_31") < order.index("pairs")
-    p.wh.invalidate_after("scored_minhash_b00_31")  # no list passed
+    p.wh.invalidate_after("scored_minhash_b00_31")
     assert not p.wh.is_complete("scored_minhash_b00_31")
     assert not p.wh.is_complete("pairs")  # everything after dropped too
     assert p.wh.is_complete("signatures")
@@ -127,14 +127,12 @@ def test_invalidate_after_walks_recorded_deps(spark, tmp_path):
     dependency DAG — an INDEPENDENT stage that merely committed later (the
     concurrent tail makes that order racy) must survive, while transitive
     dependents drop regardless of their commit time."""
-    import time as _t
-
     from dedup.io import Warehouse
 
     wh = Warehouse(str(tmp_path / "wh"), "cfg")
     one = spark.range(1)
-    # edges_simhash commits BEFORE signatures (the racy overlap order that
-    # made the time-based cut drop signatures spuriously)
+    # edges_simhash commits BEFORE signatures (the racy overlap order, in
+    # which a commit-time cut would drop signatures spuriously)
     for s, deps in (
         ("keys", []),
         ("edges_simhash", ["keys"]),
@@ -142,19 +140,25 @@ def test_invalidate_after_walks_recorded_deps(spark, tmp_path):
         ("pairs", ["signatures", "edges_simhash"]),
     ):
         wh.write(one, s, deps=deps)
-        _t.sleep(0.002)
     wh.invalidate_after("edges_simhash")
     assert not wh.is_complete("edges_simhash")
     assert not wh.is_complete("pairs")       # transitive dependent
     assert wh.is_complete("signatures")      # independent, later-committed
     assert wh.is_complete("keys")            # upstream untouched
 
+    # an ad-hoc write records no deps: its dependencies are unknowable, so
+    # the cut refuses (naming the stage) before dropping anything
+    wh.write(one, "adhoc")
+    with pytest.raises(ValueError, match="'adhoc'"):
+        wh.invalidate_after("keys")
+    assert wh.is_complete("keys") and wh.is_complete("adhoc")
+
 
 def test_invalidation_sees_manifest_missing_from_lineage(spark, tmp_path):
     """A stage whose manifest committed but whose lineage append never ran
     (crash between write_json_atomic and _append_lineage) must still be
     enumerated — journal-only enumeration left such a stage marked complete
-    over rebuilt inputs (r04 review finding). Covers both cut modes."""
+    over rebuilt inputs (r04 review finding): the deps walk must drop it."""
     import json as _json
     import os as _os
 
@@ -179,65 +183,33 @@ def test_invalidation_sees_manifest_missing_from_lineage(spark, tmp_path):
 
 
 def test_invalidate_after_cross_run_regroup(spark, tmp_path):
-    """The invalidation cut is by CURRENT manifest commit time, not journal
+    """The invalidation cut follows the recorded deps, not journal
     first-seen order: when a later run commits a band-group name the journal
     first saw AFTER its own dependents (auto regrouping across runs), the
-    time-based cut still drops those dependents (review finding — the
-    first-seen cut left them marked complete for stale reuse)."""
-    import time as _t
-
+    cut still drops those dependents (review finding — the first-seen cut
+    left them marked complete for stale reuse)."""
     from dedup.io import Warehouse
 
     wh = Warehouse(str(tmp_path / "wh"), "cfg")
     one = spark.range(1)
 
     # run 1: sigs -> scored_minhash_b00_07 -> pairs
-    for s in ("signatures", "scored_minhash_b00_07", "pairs"):
-        wh.write(one, s)
-        _t.sleep(0.002)  # distinct committed_at ms
+    run1 = (("signatures", []), ("scored_minhash_b00_07", ["signatures"]),
+            ("pairs", ["scored_minhash_b00_07"]))
+    for s, deps in run1:
+        wh.write(one, s, deps=deps)
     wh.invalidate_after("signatures")
     assert not wh.is_complete("pairs")
 
     # run 2 regroups: sigs -> scored_minhash_b00_31 (NEW name, first seen
     # in the journal after run 1's 'pairs') -> pairs
-    for s in ("signatures", "scored_minhash_b00_31", "pairs"):
-        wh.write(one, s)
-        _t.sleep(0.002)
+    run2 = (("signatures", []), ("scored_minhash_b00_31", ["signatures"]),
+            ("pairs", ["scored_minhash_b00_31"]))
+    for s, deps in run2:
+        wh.write(one, s, deps=deps)
+    assert wh.stage_order().index("scored_minhash_b00_31") > wh.stage_order().index("pairs")
 
     wh.invalidate_after("scored_minhash_b00_31")
     assert not wh.is_complete("scored_minhash_b00_31")
     assert not wh.is_complete("pairs")          # dependent dropped
     assert wh.is_complete("signatures")         # upstream untouched
-
-
-def test_legacy_config_hash_resumes(spark, tmp_path):
-    """A manifest stamped by the pre-exec-exclusion hash FORMULA (same
-    config values) must resume, not rebuild — and a genuinely different
-    hash must still recompute."""
-    from dedup.config import DedupConfig
-    from dedup.io import Warehouse
-
-    cfg = DedupConfig()
-    (legacy,) = cfg.legacy_config_hashes()
-    assert legacy != cfg.config_hash()  # the formulas genuinely differ
-    # NOT circular: this constant is the stamp the 466c645-era code actually
-    # wrote for the default config (computed by importing that commit's
-    # config.py) — legacy_config_hashes() must reproduce REAL old stamps,
-    # not merely some second hash of today's dataclass
-    assert legacy == "c5dfe8d55ee6be8a"
-
-    root = str(tmp_path / "wh")
-    old = Warehouse(root, legacy)  # an old engine: stamped the legacy hash
-    old.write(spark.range(1), "keys", deps=[])
-
-    wh = Warehouse(
-        root, cfg.config_hash(), legacy_hashes=cfg.legacy_config_hashes()
-    )
-    assert wh.is_complete("keys")  # accepted under the legacy formula
-
-    stale = Warehouse(root, cfg.config_hash())  # no legacy acceptance
-    assert not stale.is_complete("keys")
-
-    # recommit stamps the current formula: acceptance self-retires
-    wh.write(spark.range(1), "keys", deps=[])
-    assert wh.manifest("keys")["config_hash"] == cfg.config_hash()

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from dedup import imaging
 from dedup.config import DEFAULT
-from dedup.pipeline import STAGES, Pipeline
+from dedup.pipeline import Pipeline
 from dedup.reference_impl import oracle_clusters, oracle_pairs
 
 
@@ -74,7 +74,7 @@ def test_resume_after_kill(spark, synth_parquet, assignments):
     must resume from completed stages and reproduce identical assignments."""
     res, wh = assignments
     p = Pipeline(wh)
-    p.wh.invalidate_after("edges_simhash", STAGES)
+    p.wh.invalidate_after("edges_simhash")
     assert not p.wh.is_complete("assignments")
     assert p.wh.is_complete("signatures")  # earlier stages still valid
     images = spark.read.parquet(synth_parquet)
@@ -93,7 +93,7 @@ def test_resume_mid_band(spark, synth_parquet, assignments):
         s: p.wh.manifest(s)["committed_at"]
         for s in ("scored_minhash_b00_07", "scored_minhash_b08_15")
     }
-    p.wh.invalidate_after("scored_minhash_b16_23", STAGES)
+    p.wh.invalidate_after("scored_minhash_b16_23")
     assert p.wh.is_complete("scored_minhash_b08_15")
     assert not p.wh.is_complete("scored_minhash_b16_23")
     images = spark.read.parquet(synth_parquet)
@@ -133,9 +133,20 @@ def test_lineage_written(assignments):
     _, wh = assignments
     from dedup.io import Warehouse
 
-    lines = Warehouse(wh, "x").lineage()
+    w = Warehouse(wh, "x")
+    lines = w.lineage()
     stages = {l["stage"] for l in lines}
-    assert set(STAGES) <= stages
+    # band-group names depend on the grouping, so read them from the
+    # manifest of the stage that unions them; they must tile every band
+    groups = w.manifest("edges_minhash")["deps"]
+    spans = sorted((w.manifest(g)["band_lo"], w.manifest(g)["band_hi"]) for g in groups)
+    assert [lo for lo, _ in spans] == [0] + [hi + 1 for _, hi in spans[:-1]]
+    assert spans[-1][1] == DEFAULT.lsh_bands - 1
+    fixed = {
+        "keys", "reps", "signatures", "edges_minhash", "edges_simhash",
+        "edges_substring", "pairs", "assignments", "metrics", "member_scores",
+    }
+    assert fixed | set(groups) <= stages
     for l in lines:
         assert l["row_count"] >= 0 and l["wall_ms"] >= 0 and l["config_hash"]
 
@@ -175,8 +186,8 @@ def test_auto_band_groups_small_input(spark, synth_parquet, assignments, tmp_pat
     # mid-band resume contract still holds in auto mode: invalidate the
     # group stage and rerun — earlier stages reused, result identical
     before_sigs = p.wh.manifest("signatures")["committed_at"]
-    p.wh.invalidate_after("scored_minhash_b00_31", STAGES + ["scored_minhash_b00_31"])
-    p.wh.invalidate_after("edges_minhash", STAGES)
+    p.wh.invalidate_after("scored_minhash_b00_31")
+    assert not p.wh.is_complete("edges_minhash")
     assert p.wh.is_complete("signatures")
     res3 = {r["image_id"]: r["cluster_id"] for r in p.run(spark, images).collect()}
     assert res3 == res
@@ -240,7 +251,7 @@ def test_resume_with_auto_band_groups(spark, synth_parquet):
     ts = p.wh.manifest("scored_minhash_b00_31")["committed_at"]
 
     p2 = Pipeline(wh, band_groups="auto")
-    p2.wh.invalidate_after("edges_simhash", STAGES)
+    p2.wh.invalidate_after("edges_simhash")
     res2 = {r["image_id"]: r["cluster_id"] for r in p2.run(spark, images).collect()}
     assert res2 == res
     # the committed band group was reused, not recomputed

@@ -498,6 +498,25 @@ def test_fuzzy_state_cfg_mismatch_refuses(spark, tmp_path):
     }
     assert got["b0000003"] == "a0000001"  # near-dup caption linked via state
 
+    # a manifest with NO key_params leaves the state's keys unknown: read
+    # and commit both refuse it, like an absent key_format
+    import json
+
+    from dedup.streaming import StreamState
+
+    band_root = os.path.join(wh, "band_state")
+    man_path = os.path.join(band_root, "_state_manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    params = man.pop("key_params")
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    state = StreamState(band_root, key_params=params)
+    with _pytest.raises(RuntimeError, match="key params None"):
+        state.read_buckets(spark, [0])
+    with _pytest.raises(RuntimeError, match="key params None"):
+        state.commit(spark.range(0), [], man["batch_id"] + 1)
+
 
 CAP_A = "a tabby cat sleeping on a warm windowsill in the golden afternoon sun beside a potted fern"
 CAP_B = "a tabby cat sleeping on a warm windowsill in the golden morning sun beside a potted fern"

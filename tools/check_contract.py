@@ -5,7 +5,12 @@ column names, and an order-insensitive value hash.
 The four rows-only queries (q26/q33/q39/q50 — engine-native kernels with no
 ANSI-SQL twin) additionally carry machine-checkable brute-force gates here
 (set-exactness / subset+recall vs an independent numpy oracle), so the
-contract run itself fails on a regression, not just pytest. Usage:
+contract run itself fails on a regression, not just pytest.
+
+Every query's physical plan is also gated before it runs: a query fails if
+its plan holds a row-at-a-time Python UDF (BatchEvalPython) anywhere, or a
+cartesian product / broadcast nested-loop join outside the queries whose
+shape needs one (CARTESIAN_OK). Usage:
 
     python tools/check_contract.py [sf_dir] [only_query_prefix]
 
@@ -15,6 +20,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 import time
 
@@ -23,6 +29,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+# queries whose plans legitimately carry a cartesian product or broadcast
+# nested-loop join (non-equi or all-pairs joins over small sides)
+CARTESIAN_OK = {"q21", "q22", "q24", "q32", "q35", "q43", "q47"}
 
 
 def norm_cell(v):
@@ -43,6 +53,21 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     lines = sorted("|".join(norm_cell(r[i]) for i in order) for r in rows)
     return hashlib.md5("\n".join(lines).encode()).hexdigest()[:12]
+
+
+def plan_flags(spark, name: str, sdf) -> list[str]:
+    """Red flags in the query's formatted physical plan (empty = clean)."""
+    txt = sdf._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    flags = []
+    if "BatchEvalPython" in txt:
+        flags.append("plan has BatchEvalPython (row-at-a-time UDF)")
+    if name.split("_")[0] not in CARTESIAN_OK and re.search(
+        r"CartesianProduct|BroadcastNestedLoopJoin", txt
+    ):
+        flags.append("plan has a cartesian/nested-loop join")
+    return flags
 
 
 def run_gates(spark, sf_dir: str, qs: dict) -> list[str]:
@@ -228,6 +253,7 @@ def main():
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
+            problems = plan_flags(spark, name, sdf)
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL {name}: spark error: {str(e).splitlines()[0][:140]}")
@@ -235,7 +261,11 @@ def main():
             continue
         wall = time.time() - t0
         if name not in oracles:
-            print(f"ok   {name}: rows-only {len(srows)} rows [{wall:.1f}s]")
+            if problems:
+                print(f"FAIL {name}: {'; '.join(problems)} [{wall:.1f}s]")
+                failures.append(name)
+            else:
+                print(f"ok   {name}: rows-only {len(srows)} rows [{wall:.1f}s]")
             continue
         try:
             res = con.sql(oracles[name])
@@ -245,7 +275,6 @@ def main():
             print(f"FAIL {name}: duckdb error: {str(e).splitlines()[0][:140]}")
             failures.append(name)
             continue
-        problems = []
         if len(srows) != len(drows):
             problems.append(f"rowcount {len(srows)} vs {len(drows)}")
         if [c.lower() for c in scols] != [c.lower() for c in dcols]:

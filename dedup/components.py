@@ -21,6 +21,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from .config import DedupConfig, DEFAULT
 
+# star-loop round cap: the loop converges in O(log^2 n) rounds, so hitting
+# this means a bug, not a big graph
+MAX_ROUNDS = 40
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -148,8 +152,7 @@ def _driver_union_find(edges: DataFrame) -> tuple[DataFrame, int]:
 
 
 def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 40,
-    driver_edge_threshold: int | None = None, cfg: DedupConfig = DEFAULT,
+    edges: DataFrame, vertices: DataFrame, cfg: DedupConfig = DEFAULT,
     pre_gate: tuple[int, int] | None = None,
 ) -> DataFrame:
     """edges(src,dst) + vertices(id) -> assignments(image_id, cluster_id).
@@ -158,16 +161,13 @@ def connected_components(
     themselves (singletons). Edge sets below cfg.cc_driver_edge_threshold
     rows AND cfg.cc_driver_max_bytes estimated driver heap take the driver
     union-find fast path; above either bound, the distributed
-    large-star/small-star loop (set the threshold to 0 to force it). The
-    explicit `driver_edge_threshold` arg overrides the config row bound.
+    large-star/small-star loop (set the threshold to 0 to force it).
 
     pre_gate: optional (row_count, estimated_bytes) the caller already
     knows — e.g. observed on the committed pairs stage's write job — which
     skips the gate aggregate here entirely. Over-estimates are safe (the
     gate is conservative); the routing never changes results."""
     spark = edges.sparkSession
-    if driver_edge_threshold is None:
-        driver_edge_threshold = cfg.cc_driver_edge_threshold
     raw = edges.select(F.col("src").cast("string"), F.col("dst").cast("string")).where(
         F.col("src") != F.col("dst")
     )
@@ -179,7 +179,7 @@ def connected_components(
     # (same fixpoint), and at 1M/local[32] that distinct was ~2s of pure
     # overhead.
     prev = (pre_gate[0], 0, pre_gate[1]) if pre_gate is not None else _checksum(raw)
-    if 0 < prev[0] <= driver_edge_threshold and prev[2] <= cfg.cc_driver_max_bytes:
+    if 0 < prev[0] <= cfg.cc_driver_edge_threshold and prev[2] <= cfg.cc_driver_max_bytes:
         roots, roots_nbytes = _driver_union_find(raw)
         # join-back: the roots side holds only edge-touched vertices —
         # broadcast it so the big vertex table never shuffles; singletons
@@ -208,7 +208,7 @@ def connected_components(
     # planning overhead dominates — partitions are already sized explicitly
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for it in range(max_iter):
+        for _ in range(MAX_ROUNDS):
             if prev[0] == 0:
                 break
             # one star round per materialization: each operator consumes its
@@ -221,7 +221,7 @@ def connected_components(
                 break
             prev = cur
         else:
-            raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+            raise RuntimeError(f"connected_components did not converge in {MAX_ROUNDS} rounds")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)

@@ -274,9 +274,7 @@ class Pipeline:
         )
         return self.wh.read(spark, name)
 
-    def run(
-        self, spark: SparkSession, images: DataFrame, check_fidelity: bool = True
-    ) -> DataFrame:
+    def run(self, spark: SparkSession, images: DataFrame) -> DataFrame:
         from .deploy import ensure_shipped
 
         ensure_shipped(spark)  # pandas UDFs need the package on the workers
@@ -292,17 +290,12 @@ class Pipeline:
         fid_obs: list = []
 
         def build_keys() -> DataFrame:
-            with_sha = images.withColumn("sha", F.sha2(F.col("bytes"), 256))
-            if not check_fidelity:
-                return with_sha.select(
-                    "image_id", "sha", "caption", "phash",
-                    F.lit(True).alias("decode_ok"), F.lit(True).alias("phash_ok"),
-                )
             import pandas as pd
             from pyspark.sql import Observation
 
             from . import imaging
 
+            with_sha = images.withColumn("sha", F.sha2(F.col("bytes"), 256))
             psnr_min = cfg.psnr_min_db
 
             def check(batches):
@@ -340,14 +333,13 @@ class Pipeline:
             )
 
         keys = self._stage(spark, "keys", build_keys, deps=())
-        if check_fidelity:
-            if fid_obs:
-                bad = fid_obs[0].get["bad"] or 0  # came free with the write
-            else:
-                # resumed run: the committed slim table re-checks cheaply
-                bad = keys.where(~F.col("decode_ok") | ~F.col("phash_ok")).count()
-            if bad:
-                raise ValueError(f"{bad} rows failed the per-row fidelity invariant")
+        if fid_obs:
+            bad = fid_obs[0].get["bad"] or 0  # came free with the write
+        else:
+            # resumed run: the committed slim table re-checks cheaply
+            bad = keys.where(~F.col("decode_ok") | ~F.col("phash_ok")).count()
+        if bad:
+            raise ValueError(f"{bad} rows failed the per-row fidelity invariant")
 
         # ---- concurrent tail: independent stages overlap the band groups --
         # The stage graph fans out after `keys`: reps and edges_simhash need

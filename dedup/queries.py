@@ -1806,7 +1806,7 @@ def q52(spark, sf):
     Bytes and captions are unique per row (md5 of the row id), so neither
     the exact tier nor the caption MinHash tier can link anything: only the
     pHash chunk-pair state + inline bit_count verify
-    (streaming._fuzzy_tier_body) produces the merges. The real streaming
+    (streaming._fuzzy_tier) produces the merges. The real streaming
     path runs with fuzzy=True.
 
     The SQL twin models the tier's acceptance criterion exactly — a batch-1

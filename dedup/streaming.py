@@ -10,29 +10,35 @@ stage): a new row joins the cluster of any previously-seen identical
 byte-hash, caption, or pHash — the SAME three collapse keys the batch reps
 stage stacks (dedup/pipeline.py keys/reps) — preferring the
 highest-confidence match (exact > caption > pHash) when several state keys
-hit; otherwise it roots a new cluster at its own id. Fuzzy tiers (MinHash
-bands / pHash Hamming<=d) run as periodic batch compaction over the
-accumulated input — LSH band state is not meaningfully incremental at
-one-row granularity, and the batch pipeline is already resumable.
+hit; otherwise it roots a new cluster at its own id. The opt-in fuzzy tiers
+(`_fuzzy_tier`: MinHash caption bands, pHash chunk pairs) link new clusters
+to previously-seen near duplicates at the batch pipeline's own acceptance
+criteria; periodic batch compaction (`compact_fuzzy`) supplies the rest.
 
-State keys are kind-prefixed ("e|sha|caption", "c|caption", "p|<phash>") so
-tiers can never collide in the flat key-state table — a caption that IS a
-decimal string must not equi-join a pHash key (the batch tier gets this for
-free from its (kind, k) pair). The prefix scheme is versioned in the state
-manifest (key_format); folding into a state written under another format
-refuses loudly rather than silently never matching.
+State keys are kind-prefixed ("e|sha|caption", "c|caption", "p|<phash>",
+"m|<bandhash>", "s|ck|vi|vj") so tiers can never collide — a caption that IS
+a decimal string must not equi-join a pHash key (the batch tier gets this
+for free from its (kind, k) pair). The key scheme and state layout are
+versioned in the state manifest (key_format); folding into a state written
+under another format refuses loudly rather than silently never matching.
 
-State layout (crash-safe, O(touched) I/O per micro-batch):
+State layout (crash-safe, O(touched) I/O, ONE commit per micro-batch):
 
-  key-state is hash-partitioned into N_BUCKETS by pmod(xxhash64(key), B).
-  Each micro-batch READS only the buckets its keys hash into, WRITES merged
-  versions of only those buckets to a fresh `v{batch_id}` directory
-  (partitioned by bucket), and then COMMITS by atomically renaming a JSON
-  manifest that maps bucket -> current parquet dir (the io.py tmp+os.replace
-  pattern). Consequences:
-    - a crash mid-write leaves the old manifest (and old bucket dirs)
-      untouched -> the replayed batch recomputes against intact state and
-      overwrites its own half-written v-dir idempotently;
+  one state table under stream_state/ holds every tier's rows
+  (key, rep_id, rep_caption, rep_phash), partitioned by tier (exact | band |
+  phash) and by bucket = pmod(xxhash64(key), N_BUCKETS). Each micro-batch
+  READS only its own tier's touched bucket dirs (an exact lookup never scans
+  band rows), WRITES the merged versions of every touched (tier, bucket) in
+  ONE job to a fresh `v{batch_id}/tier=<t>/bucket=<b>` directory, and then
+  COMMITS by atomically renaming ONE JSON manifest that maps tier/bucket ->
+  current parquet dir (the io.py tmp+os.replace pattern). Superseded dirs
+  are deleted after the swing, which is the trigger's last job.
+  Consequences:
+    - a crash anywhere before the swing leaves the old manifest (and old
+      bucket dirs) untouched -> the replayed batch recomputes every tier
+      against intact state and overwrites its own half-written v-dir
+      idempotently; there is no state in which one tier has folded a batch
+      and another has not;
     - a MISSING state dir means empty state, but a read error on state the
       manifest points to RAISES instead of silently resetting accumulated
       clusters;
@@ -43,42 +49,60 @@ State layout (crash-safe, O(touched) I/O per micro-batch):
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .components import connected_components
+from .config import DEFAULT
 from .fs import get_fs, read_json, write_json_atomic
 from .schema import IMAGES
 
 N_BUCKETS = 64
-# state-key encoding version: bumped whenever the key construction in
-# _assign_batch changes (v2 = kind-prefixed keys + pHash tier). A manifest
-# written under another format would never equi-join the new keys — state
-# lookups would silently miss and every arrival would re-root — so commit
-# and read refuse a mismatched format instead.
-KEY_FORMAT = 2
+# state encoding version: bumped whenever the key construction in
+# _assign_batch/_fuzzy_tier or the state layout changes (v2 = kind-prefixed
+# keys + pHash tier; v3 = one state table for all tiers, partitioned by tier
+# and bucket). A manifest written under another format would never
+# equi-join the new keys — state lookups would silently miss and every
+# arrival would re-root — so commit and read refuse a mismatched format.
+KEY_FORMAT = 3
+# one row schema for every tier: exact rows leave both payloads NULL, band
+# rows carry the rep's caption, pHash rows the rep's pHash
+STATE_SCHEMA = "key string, rep_id string, rep_caption string, rep_phash long"
+
+
+def fuzzy_key_params(cfg) -> dict[str, str]:
+    """Per fuzzy tier, every cfg knob its state KEY VALUES derive from.
+    Band keys depend on the signature kernel and the banding split, pHash
+    keys on the chunking. Acceptance knobs (jaccard_threshold,
+    hamming_threshold) stay out: state rows carry the raw rep payload, so a
+    threshold change re-verifies correctly against existing state."""
+    return {
+        "band": (
+            f"m|k={cfg.shingle_k}|p={cfg.num_perms}|prime={cfg.minhash_prime}"
+            f"|seed={cfg.minhash_seed}|b={cfg.lsh_bands}|r={cfg.lsh_rows}"
+        ),
+        "phash": f"s|chunks={cfg.phash_chunks}",
+    }
 
 
 class StreamState:
-    """Bucketed key->rep_id state with a manifest-pointer commit protocol.
+    """Bucketed key->rep state of every tier, with a manifest-pointer commit
+    protocol.
 
     All small-file I/O (manifest read/write/rename, version-dir GC) goes
     through the fs shim (dedup/fs.py), so the state warehouse works on
     hdfs://-s3a:// roots, not just driver-local disk (r03 judge item)."""
 
-    def __init__(self, root: str, n_buckets: int = N_BUCKETS,
-                 columns: str = "key string, rep_id string",
-                 key_params: str | None = None):
+    def __init__(self, root: str, key_params: dict[str, str] | None = None):
         self.root = root
-        self.n_buckets = n_buckets
-        self.columns = columns  # state row schema (first column must be `key`)
-        # cfg-derived key construction parameters (fuzzy tiers): the band
-        # keys depend on the minhash/banding config and the sim keys on the
-        # pHash chunking, so state written under one cfg would silently
-        # never equi-join lookups computed under another — the exact failure
-        # mode KEY_FORMAT refuses for code-level key changes. The manifest
-        # records the string and read/commit refuse on mismatch (None =
-        # keys are cfg-independent, e.g. the exact tier).
-        self.key_params = key_params
+        # cfg-derived key params of the fuzzy tiers this stream reads and
+        # folds ({tier: params}, see fuzzy_key_params; exact keys are
+        # cfg-independent). State written under one cfg would silently never
+        # equi-join lookups computed under another — the failure mode
+        # KEY_FORMAT refuses for code-level key changes. The manifest records
+        # them per tier and read/commit refuse on mismatch.
+        self.key_params = key_params or {}
         self._fs = None
 
     @property
@@ -95,28 +119,35 @@ class StreamState:
         # raises from json.loads — never a silent reset
         return read_json(self.fs, self._manifest_path())
 
-    def bucket_col(self, key_col: str) -> F.Column:
-        return F.pmod(F.xxhash64(key_col), F.lit(self.n_buckets)).cast("int")
+    @staticmethod
+    def bucket_col(key_col: str) -> F.Column:
+        return F.pmod(F.xxhash64(key_col), F.lit(N_BUCKETS)).cast("int")
 
     def _check_key_format(self, man: dict) -> None:
-        got = man.get("key_format", 1)
-        if got != KEY_FORMAT:
+        # the bucket count is part of the format: state is keyed on it
+        got, n = man.get("key_format", 1), man.get("n_buckets")
+        if (got, n) != (KEY_FORMAT, N_BUCKETS):
             raise RuntimeError(
-                f"state at {self.root} was written with key_format {got}, this "
-                f"engine writes {KEY_FORMAT}: its keys would never equi-join, "
-                "silently re-rooting every arrival. Start a fresh state "
-                "warehouse (rerun compaction to rebuild assignments)."
+                f"state at {self.root} was written with key_format {got} over {n} "
+                f"buckets, this engine writes {KEY_FORMAT} over {N_BUCKETS}: its "
+                "keys would never equi-join, silently re-rooting every arrival. "
+                "Start a fresh state warehouse (rerun compaction to rebuild "
+                "assignments)."
             )
-        # an absent field refuses like a recorded mismatch: the state's key
-        # params are unknown, so its keys cannot be trusted to equi-join
-        if self.key_params is not None and man.get("key_params") != self.key_params:
-            raise RuntimeError(
-                f"state at {self.root} was written with key params "
-                f"{man.get('key_params')!r}, this stream derives {self.key_params!r} "
-                "from its cfg: lookups would silently never match accumulated "
-                "state. Resume with the original cfg, or start a fresh state "
-                "warehouse (compaction rebuilds assignments under the new cfg)."
-            )
+        recorded = man.get("key_params", {})
+        for tier, params in self.key_params.items():
+            # a tier with committed rows but no recorded params refuses like a
+            # recorded mismatch: its keys cannot be trusted to equi-join. A
+            # tier with neither (an exact-only state turning fuzzy) is fresh.
+            has_rows = any(k.startswith(f"{tier}/") for k in man["buckets"])
+            if recorded.get(tier) != params and (has_rows or tier in recorded):
+                raise RuntimeError(
+                    f"state at {self.root} holds {tier}-tier keys written with key "
+                    f"params {recorded.get(tier)!r}, this stream derives {params!r} "
+                    "from its cfg: lookups would silently never match accumulated "
+                    "state. Resume with the original cfg, or start a fresh state "
+                    "warehouse (compaction rebuilds assignments under the new cfg)."
+                )
 
     def check_batch_monotonic(self, batch_id: int, man: dict | None = None) -> None:
         """Refuse a batch id BELOW the manifest's: ids only move forward
@@ -133,7 +164,7 @@ class StreamState:
         batch, whose output rewrite and state fold are idempotent."""
         if man is None:
             man = self.manifest()
-        if man is not None and man.get("batch_id") is not None and man["batch_id"] > batch_id:
+        if man is not None and man["batch_id"] > batch_id:
             raise RuntimeError(
                 f"state manifest is at batch {man['batch_id']} but the stream "
                 f"delivered batch {batch_id}: checkpoint was reset against "
@@ -141,89 +172,77 @@ class StreamState:
                 "start a fresh state warehouse."
             )
 
-    def read_buckets(self, spark: SparkSession, buckets: list[int]) -> DataFrame:
-        """State rows of the requested buckets only (empty DF when no state).
+    def read_buckets(self, spark: SparkSession, tier: str, buckets: list[int]) -> DataFrame:
+        """State rows of one tier's requested buckets only (empty DF when no
+        state).
 
         Read errors propagate: the manifest is the source of truth, and a
         path it references that fails to read is corruption, not emptiness."""
         man = self.manifest()
-        empty = spark.createDataFrame([], self.columns)
+        empty = spark.createDataFrame([], STATE_SCHEMA)
         if man is None:
             return empty
         self._check_key_format(man)
-        paths = [man["buckets"][str(b)] for b in buckets if str(b) in man["buckets"]]
+        keys = (f"{tier}/{b}" for b in buckets)
+        paths = [man["buckets"][k] for k in keys if k in man["buckets"]]
         if not paths:
             return empty
-        cols = [c.strip().split()[0] for c in self.columns.split(",")]
-        return spark.read.parquet(*paths).select(*cols)
+        return spark.read.schema(STATE_SCHEMA).parquet(*paths)
 
-    def commit(
-        self, merged: DataFrame, touched: list[int], batch_id: int, gc: bool = True,
-    ) -> list[str]:
-        """Write merged state for `touched` buckets to a fresh version dir,
-        then atomically swing the manifest. `merged` carries
-        (key, rep_id, bucket) for exactly the touched buckets.
+    def commit(self, rows: DataFrame, touched: list[tuple[str, int]], batch_id: int) -> None:
+        """Write merged state for the `touched` (tier, bucket) pairs to a
+        fresh version dir in one job, atomically swing the manifest, then GC
+        the superseded bucket dirs. `rows` carries (tier, key, rep_id,
+        rep_caption, rep_phash) for exactly the touched pairs, and is the
+        micro-batch's LAST job: nothing reads the superseded dirs after it.
 
         Replay-safe: if a crash lands between the manifest swing and Spark's
         checkpoint commit, the replayed batch arrives here with a batch_id the
-        manifest has ALREADY folded (the min-merge is idempotent). Re-running
+        manifest has ALREADY folded (every fold is idempotent). Re-running
         the write would target v{batch_id} — the very dirs the manifest points
         at — and mode=overwrite would delete the only copy of the touched
         buckets before the (lazy) state read ran. So a committed batch_id is
-        an early return, never a rewrite.
-
-        gc=False skips deleting the superseded bucket dirs and returns them
-        for the CALLER to delete once every job whose lineage may still read
-        them has run: persist() alone does not close that window on a real
-        cluster — a lost executor recomputes cached partitions through the
-        original lineage, and MEMORY_AND_DISK survives memory pressure, not
-        executor death. Deferred orphans from a crash are never referenced
-        again (the manifest already points past them)."""
+        an early return, never a rewrite."""
         man = self.manifest()
         if man is not None:
             self._check_key_format(man)
-        if man is not None and man.get("batch_id") is not None:
             if man["batch_id"] == batch_id:
-                return []  # checkpoint-replay of the just-committed batch
+                return  # checkpoint-replay of the just-committed batch
             # a LOWER id refuses (checkpoint reset) — also pre-checked by
             # check_batch_monotonic BEFORE the batch publishes any output
             self.check_batch_monotonic(batch_id, man)
         vdir = os.path.join(self.root, f"v{batch_id:09d}")
-        # repartition on the bucket column first: otherwise every shuffle
-        # task writes a file into every bucket dir it sees (up to
-        # tasks x n_buckets small files PER COMMIT, compounding into the
-        # next batch's state reads); keyed on bucket, each dir gets ~1 file
-        merged.repartition(self.n_buckets, "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(vdir)
-        man = man or {"n_buckets": self.n_buckets, "buckets": {}, "key_format": KEY_FORMAT}
-        if self.key_params is not None:
-            man["key_params"] = self.key_params
-        assert man.get("n_buckets", self.n_buckets) == self.n_buckets, (
-            "n_buckets changed mid-stream; state is keyed on it"
+        # repartition on (tier, bucket) first: otherwise every shuffle task
+        # writes a file into every bucket dir it sees (up to tasks x buckets
+        # small files PER COMMIT, compounding into the next batch's state
+        # reads); keyed on the partition dir, each dir gets ~1 file
+        (
+            rows.withColumn("bucket", self.bucket_col("key"))
+            .repartition(N_BUCKETS, "tier", "bucket")
+            .write.mode("overwrite")
+            .partitionBy("tier", "bucket")
+            .parquet(vdir)
         )
+        man = man or {"key_format": KEY_FORMAT, "n_buckets": N_BUCKETS, "buckets": {}}
+        man.setdefault("key_params", {}).update(self.key_params)
         replaced = []
-        # every touched bucket materializes: `touched` is the distinct bucket
-        # set of this batch's keys, state rows were read from those buckets
-        # only, and the min-merge never drops a key — so the written
-        # partition set IS `touched`, with no listing (FS-portable) and no
-        # read-back job of the files just written
-        for b in touched:
-            old = man["buckets"].get(str(b))
-            new = os.path.join(vdir, f"bucket={b}")
-            man["buckets"][str(b)] = new
-            if old and old != new:  # never GC the dir just committed
-                replaced.append(old)
+        # every touched pair materializes: `touched` is the distinct (tier,
+        # bucket) set of this batch's keys, state rows were read from those
+        # buckets only, and no fold drops a key — so the written partition
+        # set IS `touched`, with no listing (FS-portable) and no read-back
+        # job of the files just written
+        for tier, b in touched:
+            k = f"{tier}/{b}"
+            if k in man["buckets"]:
+                replaced.append(man["buckets"][k])
+            man["buckets"][k] = os.path.join(vdir, f"tier={tier}", f"bucket={b}")
         man["batch_id"] = batch_id
         self.fs.mkdirs(self.root)
         write_json_atomic(self.fs, self._manifest_path(), man)
         # GC superseded bucket dirs AFTER the commit point (a crash here only
         # leaves orphans; the manifest never references them again)
-        if not gc:
-            return replaced
         for old in replaced:
             self.fs.delete(old, recursive=True)
-        return []
 
 
 def _batch_assignments(keyed: DataFrame, hit: DataFrame) -> DataFrame:
@@ -326,28 +345,27 @@ def _touched_buckets(df: DataFrame) -> list[int]:
 BAND_STATE_CAP = 8
 
 
-def _fuzzy_tier(spark, assigned, hit, warehouse: str, cfg):
+def _fuzzy_tier(spark, assigned, hit, state: StreamState, cfg, cached: list):
     """Opt-in in-stream NEAR-dup tiers: link NEW clusters of this batch to
     previously-seen near-duplicate captions (MinHash) AND near-duplicate
     images (SimHash/pHash), each at the batch pipeline's OWN acceptance
     criterion.
 
-    Caption tier: a bucketed band-state table maps LSH band keys
-    ("m|<bandhash>", same minhash kernel + banding config as dedup/lsh.py)
-    to up to BAND_STATE_CAP (rep_id, rep_caption) rows; band collisions
-    propose candidate reps and a candidate merges ONLY if the exact shingle
-    Jaccard between the two captions clears cfg.jaccard_threshold — the
-    same kernel (signatures.batch_shingles) and threshold the batch
-    pipeline's verify applies.
+    Caption tier: the state's band rows map LSH band keys ("m|<bandhash>",
+    same minhash kernel + banding config as dedup/lsh.py) to up to
+    BAND_STATE_CAP (rep_id, rep_caption) rows; band collisions propose
+    candidate reps and a candidate merges ONLY if the exact shingle Jaccard
+    between the two captions clears cfg.jaccard_threshold — the same kernel
+    (signatures.batch_shingles) and threshold the batch pipeline's verify
+    applies.
 
-    Image tier: a second state table maps pHash chunk-PAIR keys
-    ("s|ck|vi|vj", the same lsh._phash_keys_expr fragment as the batch
-    phash_candidates join — pigeonhole recall 1.0 for Hamming <=
-    cfg.hamming_threshold against the KEPT reps) to up to BAND_STATE_CAP
-    (rep_id, rep_phash) rows; collisions verify inline with
-    bit_count(phash ^ rep_phash) <= cfg.hamming_threshold — pure Catalyst,
-    no UDF. NULL-caption rows, invisible to the caption tier, still link
-    through this one.
+    Image tier: the state's pHash rows map chunk-PAIR keys ("s|ck|vi|vj",
+    the same lsh._phash_keys_expr fragment as the batch phash_candidates
+    join — pigeonhole recall 1.0 for Hamming <= cfg.hamming_threshold
+    against the KEPT reps) to up to BAND_STATE_CAP (rep_id, rep_phash) rows;
+    collisions verify inline with bit_count(phash ^ rep_phash) <=
+    cfg.hamming_threshold — pure Catalyst, no UDF. NULL-caption rows,
+    invisible to the caption tier, still link through this one.
 
     Every stream fuzzy merge (either tier) is a pair the compaction
     pipeline itself would accept (refine-never-split; the only asymmetry
@@ -361,38 +379,19 @@ def _fuzzy_tier(spark, assigned, hit, warehouse: str, cfg):
     NOT merge — state is read at its pre-batch commit — mirroring the
     exact tier's pHash in-batch rule: under-merge is the safe direction.
 
-    Returns (remapped assigned, (commit_fn, (touched_band, touched_sim),
-    persisted handles)) — the caller commits fuzzy state LAST (see
-    _assign_batch) so crash replay stays idempotent, and unpersists the
-    handles in a finally so a failed commit can't pin cache across retried
-    micro-batches."""
+    Returns (remapped assigned, capped state rows of both tiers or None,
+    their touched (tier, bucket) pairs); the caller folds the rows into the
+    batch's one state commit. Persisted tables are appended to `cached`,
+    which the caller unpersists in a finally."""
     from .deploy import ensure_shipped
-    from .lsh import _phash_keys_expr, band_keys_expr, with_minhash
+    from .lsh import _phash_keys_expr, band_keys_expr, with_minhash, with_shingles
 
     ensure_shipped(spark)  # the minhash pandas UDF runs on workers
-    band_state = StreamState(
-        os.path.join(warehouse, "band_state"),
-        columns="key string, rep_id string, rep_caption string",
-        # every cfg knob the band KEY VALUES derive from (signature kernel +
-        # banding split); acceptance knobs (jaccard_threshold) stay out —
-        # state rows carry the raw rep_caption, so a threshold change
-        # re-verifies correctly against existing state
-        key_params=(
-            f"m|k={cfg.shingle_k}|p={cfg.num_perms}|prime={cfg.minhash_prime}"
-            f"|seed={cfg.minhash_seed}|b={cfg.lsh_bands}|r={cfg.lsh_rows}"
-        ),
-    )
-    sim_state = StreamState(
-        os.path.join(warehouse, "simhash_state"),
-        columns="key string, rep_id string, rep_phash long",
-        # chunk-pair keys depend only on the chunking; hamming_threshold is
-        # acceptance-level (state carries raw rep_phash)
-        key_params=f"s|chunks={cfg.phash_chunks}",
-    )
     # one row per distinct (cluster, caption) / (cluster, phash) of the
     # batch — folded for ALL clusters (hit or new) so checkpoint replay,
     # where every row resolves through the just-committed exact keys and
-    # nothing is "new", still folds the identical state rows
+    # nothing is "new", still folds the identical state rows. Both tiers
+    # share one shape (the other tier's payload NULL) so they fold together.
     cands_c = (
         assigned.where(F.col("caption").isNotNull())
         .select("cluster_id", "caption")
@@ -404,10 +403,11 @@ def _fuzzy_tier(spark, assigned, hit, warehouse: str, cfg):
         # band index is already mixed into the hash (xxhash64(b, slice)),
         # so the flat key needs no band field
         .select(
-            "cluster_id", "caption",
+            F.lit("band").alias("tier"), "cluster_id", "caption",
+            F.lit(None).cast("long").alias("phash"),
             F.concat(F.lit("m|"), F.col("bh").cast("string")).alias("key"),
         )
-        .withColumn("bucket", band_state.bucket_col("key"))
+        .withColumn("bucket", state.bucket_col("key"))
         .persist()  # consumed by touched-buckets, lookup, and the fold
     )
     keyed_s = (
@@ -416,55 +416,36 @@ def _fuzzy_tier(spark, assigned, hit, warehouse: str, cfg):
         .distinct()
         .select("cluster_id", "phash", F.explode(F.expr(_phash_keys_expr("phash", cfg))).alias("k"))
         .select(
-            "cluster_id", "phash",
+            F.lit("phash").alias("tier"), "cluster_id",
+            F.lit(None).cast("string").alias("caption"), "phash",
             F.concat_ws("|", F.lit("s"), F.col("k.ck"), F.col("k.vi"), F.col("k.vj")).alias("key"),
         )
-        .withColumn("bucket", sim_state.bucket_col("key"))
+        .withColumn("bucket", state.bucket_col("key"))
         .persist()
     )
-    handles = [keyed_b, keyed_s]
-    try:
-        return _fuzzy_tier_body(
-            spark, assigned, hit, cfg, band_state, sim_state, keyed_b, keyed_s, handles
-        )
-    except BaseException:
-        for h in handles:
-            h.unpersist()
-        raise
-
-
-def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, keyed_s, handles):
-    from .lsh import with_shingles
-
+    cached += [keyed_b, keyed_s]
+    keyed = keyed_b.unionByName(keyed_s)
     # ONE unioned job materializes both caches and returns both tiers'
-    # touched-bucket sets (two sequential collects would pay one extra
-    # driver round-trip per trigger)
-    tagged = (
-        keyed_b.select(F.lit(0).alias("tier"), "bucket")
-        .unionByName(keyed_s.select(F.lit(1).alias("tier"), "bucket"))
-        .distinct()
-        .collect()
+    # touched-bucket sets
+    touched = sorted(
+        (r["tier"], r["bucket"]) for r in keyed.select("tier", "bucket").distinct().collect()
     )
-    touched_b = sorted(r["bucket"] for r in tagged if r["tier"] == 0)
-    touched_s = sorted(r["bucket"] for r in tagged if r["tier"] == 1)
-    if not touched_b and not touched_s:  # every caption AND phash NULL
-        for h in handles:
-            h.unpersist()
-        return assigned, None
+    if not touched:  # every caption AND phash NULL
+        return assigned, None, []
+    # state reads only for touched tiers: a batch that touches one tier
+    # (e.g. all captions NULL) must not pay the other's manifest read
+    seen = {
+        tier: state.read_buckets(spark, tier, [b for t, b in touched if t == tier])
+        for tier in sorted({t for t, _ in touched})
+    }
     # lookups only for clusters that rooted new this batch; broadcast the
     # (small, distinct) hit-rep set for the anti joins
     hit_reps = hit.select(F.col("rep_id").alias("cluster_id")).distinct()
     accepts = []
-    # state reads live INSIDE the touched guards: a batch that touches only
-    # one tier (e.g. all captions NULL) must not pay the other tier's
-    # manifest read + empty-DF construction every trigger (review finding);
-    # the commit closure below is guarded on the same touched lists.
-    seen_b = None
-    if touched_b:
-        seen_b = band_state.read_buckets(spark, touched_b)
+    if "band" in seen:
         m = (
             keyed_b.join(F.broadcast(hit_reps), "cluster_id", "left_anti")
-            .join(seen_b, "key")
+            .join(seen["band"], "key")
             .where(F.col("rep_id") != F.col("cluster_id"))
             # dedup candidate PAIRS before the verify: a true near-dup pair
             # collides in up to lsh_bands x BAND_STATE_CAP band rows, and
@@ -481,12 +462,10 @@ def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, 
             uni > 0, F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / uni
         ).otherwise(F.lit(0.0))
         accepts.append(m.where(score >= cfg.jaccard_threshold).select("cluster_id", "rep_id"))
-    seen_s = None
-    if touched_s:
-        seen_s = sim_state.read_buckets(spark, touched_s)
+    if "phash" in seen:
         m_s = (
             keyed_s.join(F.broadcast(hit_reps), "cluster_id", "left_anti")
-            .join(seen_s, "key")
+            .join(seen["phash"], "key")
             .where(F.col("rep_id") != F.col("cluster_id"))
             .select("cluster_id", "phash", "rep_id", "rep_phash")
             .distinct()
@@ -495,67 +474,43 @@ def _fuzzy_tier_body(spark, assigned, hit, cfg, band_state, sim_state, keyed_b, 
             .where(F.expr(f"bit_count(phash ^ rep_phash) <= {cfg.hamming_threshold}"))
         )
         accepts.append(m_s.select("cluster_id", "rep_id"))
-    acc = accepts[0]
-    for extra in accepts[1:]:
-        acc = acc.unionByName(extra)
+    # persisted: read by the assignment write and by the state fold (filled
+    # by the first); both run before the commit GCs any state dir
     remap = (
-        acc.groupBy("cluster_id")
+        reduce(DataFrame.unionByName, accepts)
+        .groupBy("cluster_id")
         .agg(F.min("rep_id").alias("fuzzy_rep"))
         .persist()
     )
-    handles.append(remap)
-    # force the cached tables now, while the exact-tier state dirs this
-    # plan's lineage reads (via hit -> seen) still exist: the exact commit
-    # that runs between here and the fuzzy commits GCs its superseded
-    # bucket dirs, and a lazy re-read of them from inside the state folds
-    # would hit FileNotFound. persist() is MEMORY_AND_DISK, so a pressured
-    # executor spills rather than recomputes through the dead lineage.
-    # (keyed_b/keyed_s were materialized by the touched-bucket collects.)
-    remap.count()
+    cached.append(remap)
     remapped = (
         assigned.join(F.broadcast(remap), "cluster_id", "left")
         .withColumn("cluster_id", F.coalesce("fuzzy_rep", "cluster_id"))
         .drop("fuzzy_rep")
     )
-
-    def _capped_fold(seen, keyed, payload_col, state):
-        fold = keyed.join(F.broadcast(remap), "cluster_id", "left").select(
-            "key",
-            F.coalesce("fuzzy_rep", "cluster_id").alias("rep_id"),
-            F.col(payload_col).alias(f"rep_{payload_col}"),
+    # capped fold of both tiers in one aggregate: keys are tier-prefixed,
+    # and per tier the other payload is NULL, so each key's kept reps are
+    # the smallest by (rep_id, payload)
+    fold = keyed.join(F.broadcast(remap), "cluster_id", "left").select(
+        "tier", "key",
+        F.coalesce("fuzzy_rep", "cluster_id").alias("rep_id"),
+        F.col("caption").alias("rep_caption"),
+        F.col("phash").alias("rep_phash"),
+    )
+    prior = [df.withColumn("tier", F.lit(t)) for t, df in seen.items()]
+    rows = (
+        reduce(DataFrame.unionByName, prior, fold)
+        .groupBy("tier", "key")
+        .agg(
+            F.slice(
+                F.array_sort(F.collect_set(F.struct("rep_id", "rep_caption", "rep_phash"))),
+                1, BAND_STATE_CAP,
+            ).alias("reps")
         )
-        return (
-            seen.unionByName(fold)
-            .groupBy("key")
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_set(F.struct("rep_id", f"rep_{payload_col}"))),
-                    1, BAND_STATE_CAP,
-                ).alias("reps")
-            )
-            .select("key", F.explode("reps").alias("r"))
-            .select("key", "r.rep_id", f"r.rep_{payload_col}")
-            .withColumn("bucket", state.bucket_col("key"))
-        )
-
-    def commit(batch_id: int, touched) -> None:
-        tb, ts = touched
-        deferred: list[str] = []
-        if tb:
-            # defer the band GC past the sim commit: the sim fold job may
-            # recompute persisted lineage (remap -> seen_b) through the
-            # superseded band dirs on executor loss — the same window the
-            # exact tier's deferred GC closes in _commit_batch
-            deferred = band_state.commit(
-                _capped_fold(seen_b, keyed_b, "caption", band_state), tb, batch_id,
-                gc=not ts,
-            )
-        if ts:
-            sim_state.commit(_capped_fold(seen_s, keyed_s, "phash", sim_state), ts, batch_id)
-        for old in deferred:
-            band_state.fs.delete(old, recursive=True)
-
-    return remapped, (commit, (touched_b, touched_s), handles)
+        .select("tier", "key", F.explode("reps").alias("r"))
+        .select("tier", "key", "r.rep_id", "r.rep_caption", "r.rep_phash")
+    )
+    return remapped, rows, touched
 
 
 def _assign_batch(
@@ -563,12 +518,16 @@ def _assign_batch(
     fuzzy: bool = False, cfg=None,
 ) -> None:
     spark = batch.sparkSession
-    state = StreamState(os.path.join(warehouse, "stream_state"))
+    cfg = cfg or DEFAULT
+    state = StreamState(
+        os.path.join(warehouse, "stream_state"),
+        key_params=fuzzy_key_params(cfg) if fuzzy else None,
+    )
     out_dir = os.path.join(warehouse, "stream_assignments", f"batch_id={batch_id}")
 
     # persist the SLIM keyed projection (ids + keys, no bytes): every
     # downstream action — the touched-bucket collect, the fuzzy tiers, the
-    # assignment write, the state folds — would otherwise re-trigger the
+    # assignment write, the state fold — would otherwise re-trigger the
     # bytes scan + sha2 through `assigned`'s lineage (measured 3x in exact
     # mode, 5x with fuzzy at 60k rows: the dominant per-batch cost). This is
     # the stream analog of the batch pipeline's scan-bytes-once keys stage.
@@ -582,13 +541,19 @@ def _assign_batch(
         F.concat(F.lit("c|"), F.col("caption")).alias("k_caption"),
         F.concat(F.lit("p|"), F.col("phash").cast("string")).alias("k_phash"),
     ).persist()
+    cached = [keyed]
     try:
-        _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy, cfg)
+        _assign_batch_body(spark, keyed, state, out_dir, batch_id, cfg if fuzzy else None, cached)
     finally:
-        keyed.unpersist()
+        # unpersist unconditionally: a failed commit (e.g. the
+        # checkpoint-reset refusal) would otherwise pin the cached tables
+        # for the life of a --follow application, one set per retried
+        # micro-batch (review finding)
+        for df in cached:
+            df.unpersist()
 
 
-def _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy, cfg):
+def _assign_batch_body(spark, keyed, state, out_dir, batch_id, fuzzy_cfg, cached):
     # the batch reps stage's three collapse keys, kind-prefixed (module
     # docstring) and priority-ordered: an exact hit outranks a caption hit
     # outranks a pHash hit, so a row matching several state keys adopts the
@@ -623,17 +588,16 @@ def _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy,
         # version dir that the partition-discovery read-back cannot re-infer
         # a schema from (UNABLE_TO_INFER_SCHEMA).
         return
-    seen = state.read_buckets(spark, touched)
+    seen = state.read_buckets(spark, "exact", touched).select("key", "rep_id")
     # inner join: only rows with at least one state match appear; min-struct
     # picks the rep of the highest-priority (lowest prio) matching key, and
     # partial-aggregates map-side like any min. prio rides along so
     # _batch_assignments can re-minimize ACROSS a group's members.
     # persisted: the hit subtree (state-bucket read + exploded join + agg)
-    # feeds TWO independent broadcast subplans of assigned0 (cap_hits and
+    # feeds TWO independent broadcast subplans of `assigned` (cap_hits and
     # exact_hits) plus hit_reps in fuzzy mode — unpersisted it re-read the
     # touched state buckets 2-3x per trigger. Slim (3 cols, micro-batch
-    # bounded); filled by the first broadcast build, before the exact
-    # commit GCs the state dirs its lineage reads.
+    # bounded).
     hit = (
         exploded.join(seen, "key")
         .groupBy("image_id")
@@ -641,40 +605,23 @@ def _assign_batch_body(spark, keyed, state, out_dir, batch_id, warehouse, fuzzy,
         .select("image_id", F.col("h.prio").alias("prio"), F.col("h.rep_id").alias("rep_id"))
         .persist()
     )
+    cached.append(hit)
     # persist the slim assignment table too: its lineage (state bucket read
-    # + hit aggregation + four broadcast joins) is consumed by up to 5
-    # actions per fuzzy trigger (fuzzy cache fills, remap force, assignment
-    # write, exact fold) — the same scan-once move as `keyed` above, one
-    # level up. Filled by the first downstream action, before the exact
-    # commit GCs the state dirs the lineage reads.
-    assigned0 = (
+    # + hit aggregation + four broadcast joins) is consumed by up to 4
+    # actions per fuzzy trigger (fuzzy cache fills, assignment write, state
+    # fold) — the same scan-once move as `keyed`, one level up
+    assigned = (
         _batch_assignments(keyed, hit)
         .select("image_id", "caption", "phash", "k_exact", "k_caption", "k_phash", "cluster_id")
         .persist()
     )
-    assigned = assigned0
-    band = None
-    try:
-        if fuzzy:
-            from .config import DEFAULT
-
-            assigned, band = _fuzzy_tier(spark, assigned, hit, warehouse, cfg or DEFAULT)
-        _commit_batch(spark, assigned, state, seen, out_dir, touched, batch_id, band)
-    finally:
-        # unpersist unconditionally: a failed commit (e.g. the
-        # checkpoint-reset refusal) would otherwise pin the cached tables
-        # for the life of a --follow application, one set per retried
-        # micro-batch (review finding)
-        hit.unpersist()
-        assigned0.unpersist()
-        if band is not None:
-            for h in band[2]:
-                h.unpersist()
-
-
-def _commit_batch(spark, assigned, state, seen, out_dir, touched, batch_id, band):
-    out = assigned.select("image_id", "cluster_id")
-    out.write.mode("overwrite").parquet(out_dir)
+    cached.append(assigned)
+    fuzzy_rows, fuzzy_touched = None, []
+    if fuzzy_cfg is not None:
+        assigned, fuzzy_rows, fuzzy_touched = _fuzzy_tier(
+            spark, assigned, hit, state, fuzzy_cfg, cached
+        )
+    assigned.select("image_id", "cluster_id").write.mode("overwrite").parquet(out_dir)
 
     # fold this batch's keys into the TOUCHED buckets only; min(rep_id) keeps
     # the merge idempotent under checkpoint replay. NULL keys filtered for
@@ -682,27 +629,21 @@ def _commit_batch(spark, assigned, state, seen, out_dir, touched, batch_id, band
     new_keys = assigned.selectExpr(
         "cluster_id AS rep_id", "stack(3, k_exact, k_caption, k_phash) AS key"
     ).where(F.col("key").isNotNull())
-    merged = (
+    rows = (
         seen.unionByName(new_keys)
         .groupBy("key")
         .agg(F.min("rep_id").alias("rep_id"))
-        .withColumn("bucket", state.bucket_col("key"))
+        .select(
+            F.lit("exact").alias("tier"), "key", "rep_id",
+            F.lit(None).cast("string").alias("rep_caption"),
+            F.lit(None).cast("long").alias("rep_phash"),
+        )
     )
-    # exact commit with DEFERRED GC: the fuzzy fold jobs below may still
-    # recompute lineage through the superseded exact-state dirs (executor
-    # loss re-derives persisted partitions from the original plan), so the
-    # old dirs are deleted only after every job of this batch has run
-    replaced = state.commit(merged, touched, batch_id, gc=False)
-    if band is not None:
-        # band-state commit LAST: a crash between the two commits replays
-        # the batch, whose exact-tier fold early-returns (already at this
-        # batch_id) while the band fold — recomputed from an `assigned`
-        # that is identical because every row now resolves through the
-        # just-committed exact keys — completes idempotently.
-        band_commit, band_touched, _handles = band
-        band_commit(batch_id, band_touched)
-    for old in replaced:
-        state.fs.delete(old, recursive=True)
+    if fuzzy_rows is not None:
+        rows = rows.unionByName(fuzzy_rows)
+    # ONE commit for every tier: a crash before it replays the whole batch
+    # against intact state, a crash after it replays into an early return
+    state.commit(rows, [("exact", b) for b in touched] + fuzzy_touched, batch_id)
 
 
 def compact_fuzzy(
@@ -740,51 +681,27 @@ def _merge_stream_spans(spark: SparkSession, res: DataFrame, warehouse: str) -> 
     band bucket over bucket_cap under hard_cap. Honoring the stream's
     already-published assignment there is strictly recall-positive and
     keeps the contract unconditional rather than
-    modulo-capping. Violations are therefore rare-to-empty: the span table
-    (distinct stream->compact cluster pairs, grouped) is tiny and the
-    transitive closure runs as a driver union-find over only the violating
-    cluster ids."""
+    modulo-capping. Violations are therefore rare-to-empty: each spanning
+    group becomes a star of edges (min cid -> cid), and the transitive
+    closure is the engine's own connected_components over the compacted
+    cluster ids, whose min-id root is the min by code point (its driver
+    fast path takes a span set this small)."""
     sa_dir = os.path.join(warehouse, "stream_assignments")
     if not get_fs(sa_dir).exists(sa_dir):
         return res  # batch-only warehouse: nothing to reconcile
     s = spark.read.parquet(sa_dir).select("image_id", F.col("cluster_id").alias("s_cid"))
-    spans = (
+    edges = (
         res.join(s, "image_id")
         .select("s_cid", "cluster_id")
         .distinct()
         .groupBy("s_cid")
         .agg(F.collect_set("cluster_id").alias("cids"))
         .where(F.size("cids") > 1)
-        .select("cids")
+        .select(F.array_min("cids").alias("src"), F.explode("cids").alias("dst"))
     )
-    groups = [r["cids"] for r in spans.collect()]
-    if not groups:
-        return res
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for g in groups:
-        root = find(min(g))
-        for c in g:
-            rc = find(c)
-            a, b = sorted((root, rc))
-            parent[b] = a
-            root = a
-    remap = [(c, find(c)) for c in parent]
-    remap_df = spark.createDataFrame(remap, "cluster_id string, merged string")
-    return (
-        res.join(F.broadcast(remap_df), "cluster_id", "left")
-        .select(
-            "image_id",
-            F.coalesce("merged", "cluster_id").alias("cluster_id"),
-        )
+    merged = connected_components(edges, res.select("cluster_id").distinct())
+    return res.join(merged.toDF("cluster_id", "merged"), "cluster_id").select(
+        "image_id", F.col("merged").alias("cluster_id")
     )
 
 

@@ -1,9 +1,9 @@
-"""Candidate verification: exact Jaccard, exact Hamming, suffix-array substring.
+"""Candidate verification: exact Jaccard, suffix-array substring.
 
 LSH (lsh.py) supplies recall; this module supplies precision by recomputing
-the EXACT metric on each candidate pair only. Jaccard and Hamming verify run
-entirely JVM-side (`array_intersect`, `bit_count` — whole-stage codegen); the
-substring pass is a grouped `applyInPandas` that builds a suffix array per
+the EXACT metric on each candidate pair only. Jaccard verify runs entirely
+JVM-side (`array_intersect` — whole-stage codegen; the pHash Hamming verify
+is fused into lsh.py's candidate join as `bit_count`); the substring pass is a grouped `applyInPandas` that builds a suffix array per
 fingerprint bucket (north_rule "suffix-array substring pass").
 
 Reference semantics: threshold match decision
@@ -21,15 +21,11 @@ from . import signatures
 
 def verify_jaccard(
     candidates: DataFrame, shingled: DataFrame, id_col: str = "rep_id", cfg: DedupConfig = DEFAULT,
-    all_scores: bool = False,
 ) -> DataFrame:
     """(id_a, id_b) candidates -> verified pairs with exact shingle Jaccard.
 
     `shingled` carries (id_col, shingles:array<long>). Joins are plain equi
-    joins on the id; the Jaccard itself is array_intersect/size — no UDF.
-    With all_scores=True the threshold filter is skipped and EVERY candidate
-    comes back scored — used by the metrics stage to measure inter-cluster
-    distance from the near-miss candidates."""
+    joins on the id; the Jaccard itself is array_intersect/size — no UDF."""
     sh = shingled.select(F.col(id_col), F.col("shingles"))
     j = (
         candidates.join(sh.withColumnsRenamed({id_col: "id_a", "shingles": "sh_a"}), "id_a")
@@ -40,36 +36,16 @@ def verify_jaccard(
             F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
         )
     )
-    if not all_scores:
-        j = j.where(F.col("score") >= F.lit(cfg.jaccard_threshold))
-    return j.select(
+    return j.where(F.col("score") >= F.lit(cfg.jaccard_threshold)).select(
         "id_a", "id_b", F.lit("minhash").alias("match_type"), F.col("score").cast("double")
     )
 
 
-def verify_hamming(
-    candidates: DataFrame, phashes: DataFrame, id_col: str = "rep_id",
-    phash_col: str = "phash", cfg: DedupConfig = DEFAULT,
-) -> DataFrame:
-    """Exact 64-bit Hamming distance on candidate pairs (bit_count(xor))."""
-    ph = phashes.select(F.col(id_col), F.col(phash_col))
-    j = (
-        candidates.join(ph.withColumnsRenamed({id_col: "id_a", phash_col: "ph_a"}), "id_a")
-        .join(ph.withColumnsRenamed({id_col: "id_b", phash_col: "ph_b"}), "id_b")
-        .withColumn("hd", F.expr("bit_count(ph_a ^ ph_b)"))
-    )
-    return (
-        j.where(F.col("hd") <= F.lit(cfg.hamming_threshold))
-        .select(
-            "id_a",
-            "id_b",
-            F.lit("simhash").alias("match_type"),
-            (F.lit(1.0) - F.col("hd") / F.lit(64.0)).cast("double").alias("score"),
-        )
-    )
-
-
 # ------------------------------------------------ suffix-array substring pass
+
+# containers at least this long verify by suffix array instead of `instr`:
+# O(len * log) per probe beats instr's O(len_a * len_b) on long documents
+SA_MIN_CONTAINER_LEN = 2048
 
 
 def _suffix_array(s: str) -> list[int]:
@@ -135,7 +111,7 @@ def substring_hits_in_container(container: str, needles: list[str]) -> list[bool
 
 def substring_edges(
     captions_df: DataFrame, id_col: str = "rep_id", caption_col: str = "caption",
-    cfg: DedupConfig = DEFAULT, sa_min_container_len: int = 2048,
+    cfg: DedupConfig = DEFAULT,
     max_container_len: int | None = None, approx_rows: int | None = None,
 ) -> DataFrame:
     """Suffix-array substring pass over unique captions.
@@ -151,15 +127,14 @@ def substring_edges(
     Verification is fused INTO the candidate join for short containers
     (`instr`, whole-stage codegen — captions travel inline, so the raw
     collision set never hits a distinct or a join-back; measured 2M candidate
-    rows -> trivial on a common-phrase-heavy corpus). Containers longer than
-    `sa_min_container_len` instead route to a grouped applyInPandas that
+    rows -> trivial on a common-phrase-heavy corpus). Containers of
+    SA_MIN_CONTAINER_LEN or more chars instead route to a grouped applyInPandas that
     builds the container's suffix array once and binary-searches each
     candidate fragment — O(len * log) per probe beats instr's O(len_a*len_b)
     exactly when documents are long (the 100TB-document regime)."""
     src = captions_df.select(id_col, caption_col)
     pairs = (
-        _containment_hits(src, src, id_col, caption_col, cfg,
-                          sa_min_container_len, exclude_self=True,
+        _containment_hits(src, src, id_col, caption_col, cfg, exclude_self=True,
                           max_container_len=max_container_len,
                           approx_rows=approx_rows)
         .select(F.least("cid", "fid").alias("id_a"), F.greatest("cid", "fid").alias("id_b"))
@@ -172,8 +147,7 @@ def substring_edges(
 
 def _containment_hits(
     containers_src: DataFrame, fragments_src: DataFrame,
-    id_col: str, text_col: str, cfg: DedupConfig,
-    sa_min_container_len: int, exclude_self: bool,
+    id_col: str, text_col: str, cfg: DedupConfig, exclude_self: bool,
     max_container_len: int | None = None, approx_rows: int | None = None,
 ) -> DataFrame:
     """(cid, fid) pairs where the fragment row's text occurs inside the
@@ -188,7 +162,7 @@ def _containment_hits(
 
     max_container_len: a caller-known upper bound on container text length
     (e.g. observed for free on an upstream stage write). When it proves no
-    container can reach `sa_min_container_len`, the suffix-array branch is
+    container can reach SA_MIN_CONTAINER_LEN, the suffix-array branch is
     omitted from the PLAN — the r06 profile measured ~1.3s of guaranteed-
     empty dropDuplicates/applyInPandas/union stages per call on short-text
     corpora (OPTIMIZATION_r06.md §2). None (the default) keeps both
@@ -259,17 +233,17 @@ def _containment_hits(
         )
     )
     sa_possible = (
-        max_container_len is None or max_container_len >= sa_min_container_len
+        max_container_len is None or max_container_len >= SA_MIN_CONTAINER_LEN
     )
     # short containers: verify inline, pre-distinct (codegen instr)
     short = raw
     if sa_possible:
-        short = short.where(F.col("c_len") < sa_min_container_len)
+        short = short.where(F.col("c_len") < SA_MIN_CONTAINER_LEN)
     short = short.where(F.instr(F.col("c_cap"), F.col("f_cap")) > 0).select("cid", "fid")
     if not sa_possible:
         return short
     # long containers: dedup candidates, then per-container suffix array
-    long_cand = raw.where(F.col("c_len") >= sa_min_container_len).dropDuplicates(["cid", "fid"])
+    long_cand = raw.where(F.col("c_len") >= SA_MIN_CONTAINER_LEN).dropDuplicates(["cid", "fid"])
     out_schema = T.StructType(
         [
             T.StructField("cid", long_cand.schema["cid"].dataType),
@@ -290,8 +264,7 @@ def flag_contaminated(
     corpus: DataFrame, benchmark: DataFrame,
     id_col: str = "doc_id", text_col: str = "text",
     bench_id_col: str = "bench_id", bench_text_col: str = "fragment",
-    cfg: DedupConfig = DEFAULT, sa_min_container_len: int = 2048,
-    max_container_len: int | None = None,
+    cfg: DedupConfig = DEFAULT, max_container_len: int | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: corpus rows whose text CONTAINS any
     benchmark fragment (lowercased, fragments >= cfg.substr_min_len chars —
@@ -309,7 +282,7 @@ def flag_contaminated(
     hits = _containment_hits(
         corpus.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")),
         benchmark.select(F.col(bench_id_col).alias("id"), F.col(bench_text_col).alias("t")),
-        "id", "t", cfg, sa_min_container_len, exclude_self=False,
+        "id", "t", cfg, exclude_self=False,
         max_container_len=max_container_len,
     )
     return (

@@ -21,7 +21,10 @@ compaction warehouse is itself resumable per stage.
 
 Outputs under --warehouse:
     stream_assignments/batch_id=*/   (image_id, cluster_id) per micro-batch
-    stream_state/                    bucketed key state + manifest
+    stream_state/                    key state of every tier (exact, and with
+                                     --fuzzy band + pHash), partitioned
+                                     tier=*/bucket=*, one manifest, one
+                                     atomic commit per micro-batch
     compact/{run_id}/                full-pipeline warehouse (with --compact)
 """
 
@@ -47,8 +50,8 @@ def main() -> None:
                     help="bound each micro-batch to K input files")
     ap.add_argument("--fuzzy", action="store_true",
                     help="also link near-duplicates in-stream: captions "
-                         "(MinHash band state + exact-Jaccard verify) and "
-                         "images (pHash chunk-pair state + Hamming verify)")
+                         "(MinHash band keys + exact-Jaccard verify) and "
+                         "images (pHash chunk-pair keys + Hamming verify)")
     ap.add_argument("--compact", action="store_true",
                     help="run fuzzy-tier batch compaction after the drain")
     ap.add_argument("--compact-run-id", default="compact0")

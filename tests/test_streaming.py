@@ -259,7 +259,7 @@ def test_null_caption_rows_root_themselves(spark, tmp_path):
     state."""
     from pyspark.sql import functions as F
 
-    from dedup.streaming import StreamState, _assign_batch
+    from dedup.streaming import N_BUCKETS, StreamState, _assign_batch
 
     wh = str(tmp_path / "wh")
     rows = synth.generate(10, seed=41)
@@ -275,7 +275,7 @@ def test_null_caption_rows_root_themselves(spark, tmp_path):
     assert got[rows[0]["image_id"]] == rows[0]["image_id"]
     assert all(v is not None for v in got.values())
     state = StreamState(os.path.join(wh, "stream_state"))
-    seen = state.read_buckets(spark, list(range(state.n_buckets)))
+    seen = state.read_buckets(spark, "exact", list(range(N_BUCKETS)))
     assert seen.where(F.col("rep_id").isNull()).count() == 0
     # and no NULL KEY rows entered state either (dead rows that never
     # equi-join but min-merge forever — r03 advice)
@@ -444,45 +444,57 @@ def test_key_format_mismatch_refuses(spark, tmp_path):
     man_path = os.path.join(wh, "stream_state", "_state_manifest.json")
     with open(man_path) as f:
         man = json.load(f)
-    del man["key_format"]  # simulate a v1 (pre-prefix) state warehouse
-    with open(man_path, "w") as f:
-        json.dump(man, f)
     state = StreamState(os.path.join(wh, "stream_state"))
-    with _pytest.raises(RuntimeError, match="key_format"):
-        state.read_buckets(spark, [0])
-    with _pytest.raises(RuntimeError, match="key_format"):
-        _assign_batch(
-            spark.createDataFrame(synth.to_arrow([_row("b0000001", "y", 2, b"\x02")]).to_pandas()),
-            1, wh,
-        )
+    # v1 (pre-prefix, no key_format field) and v2 (one state table per tier)
+    for fmt in (None, 2):
+        if fmt is None:
+            man.pop("key_format")
+        else:
+            man["key_format"] = fmt
+        with open(man_path, "w") as f:
+            json.dump(man, f)
+        with _pytest.raises(RuntimeError, match="key_format .*fresh state warehouse"):
+            state.read_buckets(spark, "exact", [0])
+        with _pytest.raises(RuntimeError, match="key_format"):
+            _assign_batch(
+                spark.createDataFrame(synth.to_arrow([_row("b0000001", "y", 2, b"\x02")]).to_pandas()),
+                1, wh,
+            )
 
 
 def test_fuzzy_state_cfg_mismatch_refuses(spark, tmp_path):
     """The fuzzy tiers' state KEYS derive from cfg (minhash/banding for the
-    band state, pHash chunking for the sim state): resuming the stream with
-    a different cfg would silently never match accumulated state — the
-    manifests record the key params and refuse a mismatch loudly, like
-    key_format does for code-level key changes (r04 review finding)."""
+    band tier, pHash chunking for the pHash tier): resuming the stream with
+    a different cfg would silently never match accumulated state — the one
+    state manifest records the key params per tier and refuses a mismatch
+    loudly, like key_format does for code-level key changes (r04 review
+    finding). An exact-only state has no fuzzy rows and no params, so a
+    stream may still turn fuzzy on over it."""
+    import json
+
     import pytest as _pytest
 
     from dedup.config import DedupConfig
-    from dedup.streaming import _assign_batch
+    from dedup.streaming import StreamState, _assign_batch, fuzzy_key_params
 
     wh = str(tmp_path / "wh")
     _assign_batch(
         spark.createDataFrame(synth.to_arrow([_row("a0000001", CAP_A, 1, b"\x01")]).to_pandas()),
         0, wh, fuzzy=True,
     )
-    # changed minhash seed -> different band keys; chunking unchanged, but
-    # the band-state read fires first and must refuse
-    with _pytest.raises(RuntimeError, match="key params"):
+    root = os.path.join(wh, "stream_state")
+    man_path = os.path.join(root, "_state_manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    assert man["key_params"] == fuzzy_key_params(DedupConfig())
+    # changed minhash seed -> different band keys; chunking unchanged
+    with _pytest.raises(RuntimeError, match="band-tier keys .*key params"):
         _assign_batch(
             spark.createDataFrame(synth.to_arrow([_row("b0000001", CAP_B, 2, b"\x02")]).to_pandas()),
             1, wh, fuzzy=True, cfg=DedupConfig(minhash_seed=999),
         )
-    # changed pHash chunking -> different sim keys; band params unchanged
-    # relative to DEFAULT, so the refusal comes from the sim-state side
-    with _pytest.raises(RuntimeError, match="key params"):
+    # changed pHash chunking -> different pHash keys; band params unchanged
+    with _pytest.raises(RuntimeError, match="phash-tier keys .*key params"):
         _assign_batch(
             spark.createDataFrame(synth.to_arrow([_row("b0000002", CAP_B, 3, b"\x03")]).to_pandas()),
             1, wh, fuzzy=True, cfg=DedupConfig(phash_chunks=4),
@@ -498,24 +510,41 @@ def test_fuzzy_state_cfg_mismatch_refuses(spark, tmp_path):
     }
     assert got["b0000003"] == "a0000001"  # near-dup caption linked via state
 
-    # a manifest with NO key_params leaves the state's keys unknown: read
-    # and commit both refuse it, like an absent key_format
-    import json
-
-    from dedup.streaming import StreamState
-
-    band_root = os.path.join(wh, "band_state")
-    man_path = os.path.join(band_root, "_state_manifest.json")
+    # a tier with committed rows but NO recorded key params leaves its keys
+    # unknown: read and commit both refuse it, like an absent key_format
     with open(man_path) as f:
         man = json.load(f)
-    params = man.pop("key_params")
+    params = man["key_params"].pop("band")
     with open(man_path, "w") as f:
         json.dump(man, f)
-    state = StreamState(band_root, key_params=params)
+    state = StreamState(root, key_params={"band": params})
     with _pytest.raises(RuntimeError, match="key params None"):
-        state.read_buckets(spark, [0])
+        state.read_buckets(spark, "band", [0])
     with _pytest.raises(RuntimeError, match="key params None"):
         state.commit(spark.range(0), [], man["batch_id"] + 1)
+
+    # exact-only state, then fuzzy: no fuzzy rows, no params -> resumes, and
+    # the fuzzy tiers then link across later batches
+    wh2 = str(tmp_path / "wh2")
+    _assign_batch(
+        spark.createDataFrame(synth.to_arrow([_row("c0000001", CAP_FAR, 0x00, b"\x05")]).to_pandas()),
+        0, wh2,
+    )
+    _assign_batch(
+        spark.createDataFrame(synth.to_arrow([_row("c0000002", CAP_A, 0xFF, b"\x06")]).to_pandas()),
+        1, wh2, fuzzy=True,
+    )
+    _assign_batch(
+        spark.createDataFrame(synth.to_arrow([_row("c0000003", CAP_B, 0xFF00, b"\x07")]).to_pandas()),
+        2, wh2, fuzzy=True,
+    )
+    with open(os.path.join(wh2, "stream_state", "_state_manifest.json")) as f:
+        assert json.load(f)["key_params"] == fuzzy_key_params(DedupConfig())
+    got = {
+        r["image_id"]: r["cluster_id"]
+        for r in spark.read.parquet(os.path.join(wh2, "stream_assignments")).collect()
+    }
+    assert got == {"c0000001": "c0000001", "c0000002": "c0000002", "c0000003": "c0000002"}
 
 
 CAP_A = "a tabby cat sleeping on a warm windowsill in the golden afternoon sun beside a potted fern"
@@ -575,64 +604,76 @@ def test_fuzzy_in_batch_near_dups_do_not_merge(spark, tmp_path):
     assert got["a0000001"] != got["a0000002"]
 
 
-def test_fuzzy_replay_idempotent_and_state_intact(spark, tmp_path):
-    """Checkpoint replay with fuzzy=True: same batch_id re-delivered after
-    BOTH commits must leave both state manifests unswung and reproduce
-    byte-identical assignments; a crash replay BETWEEN the two commits
-    (exact folded, band not) must complete the band commit idempotently."""
-    import json
+def _state_rows(spark, wh):
+    """Every tier's state rows, sorted."""
+    from dedup.streaming import N_BUCKETS, StreamState
 
-    from dedup.streaming import StreamState, _assign_batch
+    state = StreamState(os.path.join(wh, "stream_state"))
+    return sorted(
+        (tier, *r)
+        for tier in ("exact", "band", "phash")
+        for r in state.read_buckets(spark, tier, list(range(N_BUCKETS))).collect()
+    )
+
+
+def test_fuzzy_replay_idempotent_and_state_intact(spark, tmp_path):
+    """Checkpoint replay with fuzzy=True: the same batch_id re-delivered
+    after the commit must leave the one state manifest unswung and
+    reproduce byte-identical assignments; a crash BEFORE the one commit
+    (state still at batch 0) must replay to identical state rows and
+    assignments. Every tier lives in the one state table: the warehouse
+    holds exactly one state manifest."""
+    import json
+    import shutil
+
+    from dedup.streaming import _assign_batch
 
     wh = str(tmp_path / "wh")
-    b0 = [_row("a0000001", CAP_A, 0x00, b"\x01")]
-    b1 = [_row("b0000001", CAP_B, 0xFF, b"\x02")]
+    base = 0x0123456789ABCDEF
+    b0 = [_row("a0000001", CAP_A, base, b"\x01")]
+    # links to a1 through BOTH fuzzy tiers (near caption, pHash HD 3)
+    b1 = [_row("b0000001", CAP_B, base ^ 0b111, b"\x02")]
     _assign_batch(spark.createDataFrame(synth.to_arrow(b0).to_pandas()), 0, wh, fuzzy=True)
+    state_dir = os.path.join(wh, "stream_state")
+    snapshot = str(tmp_path / "state_snapshot")
+    shutil.copytree(state_dir, snapshot)
     batch1 = spark.createDataFrame(synth.to_arrow(b1).to_pandas())
     _assign_batch(batch1, 1, wh, fuzzy=True)
     asg_dir = os.path.join(wh, "stream_assignments")
     got1 = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
+    assert got1["b0000001"] == "a0000001"
+    rows1 = _state_rows(spark, wh)
+    assert {r[0] for r in rows1} == {"exact", "band", "phash"}
+    assert {r[2] for r in rows1} == {"a0000001"}  # every tier folded the merged rep
 
-    exact_man = os.path.join(wh, "stream_state", "_state_manifest.json")
-    band_man = os.path.join(wh, "band_state", "_state_manifest.json")
-    with open(exact_man) as f:
-        em1 = json.load(f)
-    with open(band_man) as f:
-        bm1 = json.load(f)
+    man_path = os.path.join(state_dir, "_state_manifest.json")
+    manifests = [
+        os.path.join(d, f) for d, _, fs in os.walk(wh) for f in fs if f == "_state_manifest.json"
+    ]
+    assert manifests == [man_path]
+    assert sorted(os.listdir(wh)) == ["stream_assignments", "stream_state"]
+    with open(man_path) as f:
+        man1 = json.load(f)
 
     _assign_batch(batch1, 1, wh, fuzzy=True)  # full replay, same batch_id
-    with open(exact_man) as f:
-        assert json.load(f)["buckets"] == em1["buckets"]
-    with open(band_man) as f:
-        assert json.load(f)["buckets"] == bm1["buckets"]
+    with open(man_path) as f:
+        assert json.load(f) == man1
     got2 = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
     assert got2 == got1
 
-    # crash between the two commits: rewind ONLY the band manifest to its
-    # pre-batch-1 state and replay — the exact fold early-returns, the band
-    # fold recomputes from state-resolved assignments and must land the
-    # identical (key, rep_id) rows
-    bm0 = dict(bm1)
-    bm0["batch_id"] = 0
-    # batch-0 band keys all live in batch-0 vdirs; batch-1-only buckets roll back to absent
-    bm0["buckets"] = {
-        b: p for b, p in bm1["buckets"].items() if "v000000000" in p
-    }
-    with open(band_man, "w") as f:
-        json.dump(bm0, f)
+    # crash before the one commit: state reverts to its post-batch-0
+    # snapshot (manifest + bucket dirs) and the batch replays
+    shutil.rmtree(state_dir)
+    shutil.copytree(snapshot, state_dir)
     _assign_batch(batch1, 1, wh, fuzzy=True)
-    with open(band_man) as f:
-        bm2 = json.load(f)
-    assert bm2["batch_id"] == 1
-    state = StreamState(os.path.join(wh, "band_state"),
-                        columns="key string, rep_id string, rep_caption string")
-    reps = {r["rep_id"] for r in state.read_buckets(spark, list(range(64))).collect()}
-    assert reps == {"a0000001"}  # every band row carries the merged rep
+    with open(man_path) as f:
+        assert json.load(f)["batch_id"] == 1
+    assert _state_rows(spark, wh) == rows1
     got3 = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
     assert got3 == got1
 
 
-def test_fuzzy_band_state_capped(spark, tmp_path, monkeypatch):
+def test_fuzzy_band_tier_capped(spark, tmp_path, monkeypatch):
     """A hot band key (many distinct captions colliding in one band bucket)
     keeps at most BAND_STATE_CAP deterministic (rep_id, rep_caption) rows —
     bounded state, the stream analog of the batch tier's bucket_cap."""
@@ -658,10 +699,9 @@ def test_fuzzy_band_state_capped(spark, tmp_path, monkeypatch):
             ),
             i, wh, fuzzy=True,
         )
-    state = st.StreamState(os.path.join(wh, "band_state"),
-                           columns="key string, rep_id string, rep_caption string")
+    state = st.StreamState(os.path.join(wh, "stream_state"))
     per_key = (
-        state.read_buckets(spark, list(range(64)))
+        state.read_buckets(spark, "band", list(range(st.N_BUCKETS)))
         .groupBy("key").count().agg(F.max("count").alias("m")).collect()[0]["m"]
     )
     assert per_key <= 2
@@ -811,56 +851,3 @@ def test_fuzzy_both_tiers_accept_takes_min_rep(spark, tmp_path):
     asg = spark.read.parquet(os.path.join(wh, "stream_assignments"))
     got = {r["image_id"]: r["cluster_id"] for r in asg.collect()}
     assert got["b0000001"] == "a0000001"
-
-
-def test_fuzzy_crash_between_band_and_sim_commits_replays_clean(spark, tmp_path):
-    """The fuzzy path has THREE ordered commits (exact -> band -> sim). A
-    crash after the band commit but before the sim commit replays the batch
-    with exact+band already folded: the replay must complete the sim commit
-    with byte-identical state rows and unchanged assignments — pinning the
-    invariant chain (replayed rows all resolve through exact state, remap
-    comes back empty, folds reproduce the committed rows, earlier commits
-    early-return)."""
-    import json
-    import shutil
-
-    from dedup.streaming import StreamState, _assign_batch
-
-    wh = str(tmp_path / "wh")
-    base = 0x0123456789ABCDEF
-    b0 = [_row("a0000001", CAP_A, base, b"\x01")]
-    # links to a1 through BOTH tiers (near caption, pHash HD 3)
-    b1 = [_row("b0000001", CAP_B, base ^ 0b111, b"\x02")]
-    _assign_batch(spark.createDataFrame(synth.to_arrow(b0).to_pandas()), 0, wh, fuzzy=True)
-    # snapshot the ENTIRE sim-state dir (manifest + v0 bucket dirs) — this
-    # is exactly what a crash before the sim commit's write leaves behind
-    sim_dir = os.path.join(wh, "simhash_state")
-    shutil.copytree(sim_dir, str(tmp_path / "sim_snapshot"))
-    batch1 = spark.createDataFrame(synth.to_arrow(b1).to_pandas())
-    _assign_batch(batch1, 1, wh, fuzzy=True)
-
-    sim = StreamState(sim_dir, columns="key string, rep_id string, rep_phash long")
-    clean_rows = sorted(
-        (r["key"], r["rep_id"], r["rep_phash"])
-        for r in sim.read_buckets(spark, list(range(64))).collect()
-    )
-    asg_dir = os.path.join(wh, "stream_assignments")
-    got1 = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
-    assert got1["b0000001"] == "a0000001"
-
-    # crash simulation: sim state reverts to its post-batch-0 snapshot while
-    # exact + band state remain committed at batch 1
-    shutil.rmtree(sim_dir)
-    shutil.copytree(str(tmp_path / "sim_snapshot"), sim_dir)
-    sim_man = os.path.join(sim_dir, "_state_manifest.json")
-
-    _assign_batch(batch1, 1, wh, fuzzy=True)  # replay completes the sim commit
-    with open(sim_man) as f:
-        assert json.load(f)["batch_id"] == 1
-    replay_rows = sorted(
-        (r["key"], r["rep_id"], r["rep_phash"])
-        for r in sim.read_buckets(spark, list(range(64))).collect()
-    )
-    assert replay_rows == clean_rows
-    got2 = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(asg_dir).collect()}
-    assert got2 == got1

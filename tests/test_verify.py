@@ -117,7 +117,7 @@ def test_flag_contaminated_two_table(spark):
     )
     got = {
         (r["doc_id"], r["n_bench_hits"], r["first_bench"])
-        for r in flag_contaminated(corpus, bench, sa_min_container_len=2048).collect()
+        for r in flag_contaminated(corpus, bench).collect()
     }
     assert got == {(2, 1, "b1"), (3, 1, "b1")}
 
